@@ -89,16 +89,6 @@ def flagship_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagship_points(with_derived_position(li, "point_id"))
 
 
-def flagship_generated(spark: SparkSession, n_points: int) -> DataFrame:
-    """Scaling-measurement flagship: n generated points (no parquet bound) —
-    the two-cluster-size criterion needs a workload large enough that added
-    cores pay for their task overhead."""
-    pts = with_derived_position(
-        spark.range(1, n_points + 1).selectExpr("id AS point_id"), "point_id"
-    )
-    return flagship_points(pts)
-
-
 def flagship(
     spark: SparkSession,
     sf_dir: str,

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..operators.chains import MinLabelUnionFind
 from ..sources.points import LINEITEM_VKEY_SQL as _VKEY, derived_lat_sql, derived_lon_sql
 from . import register
 
@@ -396,33 +397,21 @@ def rings_from_segments(segs: DataFrame) -> DataFrame:
     segs = segs.localCheckpoint(eager=False)
     pdf = segs.toPandas()
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
+    uf = MinLabelUnionFind()
     by_ep: dict[tuple[int, int], int] = {}
     for r in pdf.itertuples():
         k = int(r.k)
-        parent.setdefault(k, k)
+        uf.find(k)  # register: every segment belongs to a ring
         for ep in ((r.x0, r.y0), (r.x1, r.y1)):
             o = by_ep.pop(ep, None)  # each endpoint pairs exactly 2 segs
             if o is None:
                 by_ep[ep] = k
             else:
-                ra, rb = find(k), find(o)
-                if ra != rb:
-                    # min-label union keeps ring_id = min segment key,
-                    # matching the recursive-CTE oracle's MIN(lab)
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
+                # min-label union keeps ring_id = min segment key,
+                # matching the recursive-CTE oracle's MIN(lab)
+                uf.union(k, o)
     labels = spark.createDataFrame(
-        [(k, find(k)) for k in parent], "k long, ring long"
+        [(k, uf.find(k)) for k in uf.parent], "k long, ring long"
     )
     ringv = segs.join(F.broadcast(labels), "k")
     return ringv.groupBy("ring").agg(

@@ -1,4 +1,4 @@
-"""S5/S6: boundary sources — Osmosis .poly file reader and bbox literal.
+"""S5/S6: boundary sources — the Osmosis .poly file reader.
 
 The reference reads Osmosis polygon files (lib/Boundary.pm:34-52: first
 section's ring, reversed to CCW when delivered CW) or a `--bbox` rectangle
@@ -40,11 +40,3 @@ def read_poly(text_or_path: str) -> list[tuple[float, float]]:
     if signed_area(ring) < 0:  # CW input → reverse to CCW (Boundary.pm:46)
         ring = list(reversed(ring))
     return ring
-
-
-def bbox_ring(minlon: float, minlat: float, maxlon: float, maxlat: float):
-    """--bbox → closed CCW rectangle ring (osm2mp.pl:257-266)."""
-    return [
-        (minlon, minlat), (maxlon, minlat), (maxlon, maxlat), (minlon, maxlat),
-        (minlon, minlat),
-    ]

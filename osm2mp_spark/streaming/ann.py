@@ -30,19 +30,9 @@ compaction only merges deltas whose batch the dedup metrics ledger certifies
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
-    _batch_dirs,
-    _commit_compacted,
-    _compacted_dir,
-    _join,
-    _rmtree,
-    pruned_store_scan,
-)
+from .dedup import BatchLog, _join, _metrics_log, pruned_store_scan
 
 TOPK_SCHEMA = (
     "query_id string, neighbor_id string, hamming int, rnk int, "
@@ -88,27 +78,20 @@ def _read_state(
 ) -> DataFrame | None:
     """Current top-k state restricted to `touched` query ids (None = all):
     pruned scan of the compacted prefix + full read of the (bounded) delta
-    tail, newest delta winning per query."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(state_root)
-    if below is not None and n > below + 1:
-        raise RuntimeError(
-            f"ANN state compacted through batch {n} but batch {below} is "
-            f"being (re)processed — a replay can sit at most ONE batch "
-            f"behind the horizon"
-        )
+    tail, newest delta winning per query. `below` bounds the tail (and
+    applies BatchLog's replay-horizon guard)."""
+    state = BatchLog(spark, state_root)
+    tail = state.tail(below)
     parts = []
-    if comp is not None:
+    if state.comp is not None:
         if touched is None:
-            parts.append(spark.read.parquet(comp))
+            parts.append(spark.read.parquet(state.comp))
         else:
             parts.append(
-                pruned_store_scan(spark, comp, touched, key_col="query_id")
+                pruned_store_scan(
+                    spark, state.comp, touched, key_col="query_id"
+                )
             )
-    tail = [
-        d for d in _batch_dirs(state_root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
     if tail:
         parts.append(spark.read.parquet(*tail))
     if not parts:
@@ -142,7 +125,6 @@ def update_topk_state(
     (queries with no new candidates keep their previous rows — latest
     delta wins on read). Idempotent overwrite; a replayed batch recomputes
     byte-identical deltas from the state below it."""
-    _SPARK_FOR_FS[0] = spark
     cand = _oriented_candidates(pairs, query_pred)
     touched = [r[0] for r in cand.select("query_id").distinct().collect()]
     if not touched:
@@ -193,45 +175,23 @@ def compact_topk_state(
     dedup store's metrics ledger at `store_path` — a delta whose batch has
     no metrics row may be replayed and must stay out of the merge (same
     crash-window argument as streaming.dedup.compact_store)."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(state_root)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-    deltas = [
-        d for d in _batch_dirs(state_root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp_n
-    ]
-    if not deltas:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in deltas]
-    horizon = max(ids) + 1
-    tail = [d for d, i in zip(deltas, ids) if i >= comp_n]
-    if not tail:
-        for d in deltas:
-            _rmtree(d)
-        return comp_n
-    merged = spark.read.parquet(*tail)
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
+    state = BatchLog(spark, state_root)
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        state_root, horizon,
-        lambda tmp: (
+
+    def write(tmp: str, tail: list[str]) -> None:
+        merged = spark.read.parquet(*tail)
+        if state.comp:
+            merged = spark.read.parquet(state.comp).unionByName(merged)
+        (
             _latest_per_query(merged)
             .repartitionByRange(n_parts, "query_id")
             .sortWithinPartitions("query_id")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=[d for d, i in zip(deltas, ids) if i < horizon],
-        old_comp=comp,
-    )
-    return horizon
+        )
+
+    return state.compact(_metrics_log(spark, store_path).covers, write)
 
 
 __all__ = [

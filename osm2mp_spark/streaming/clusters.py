@@ -35,32 +35,19 @@ dedup metrics ledger (same crash-window rules as the other stores).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
-    _batch_dirs,
-    _chunked_in_scan,
-    _commit_compacted,
-    _compacted_dir,
-    _join,
-    _rmtree,
-    _tail_dirs,
-)
+from .dedup import BatchLog, _chunked_in_scan, _join, _metrics_log, _rmtree
 
 LABELS_SCHEMA = "vertex long, label long"
 FORWARD_SCHEMA = "from_label long, to_label long"
 
 
-def _forward_map(spark: SparkSession, forward_root: str,
-                 below: int | None = None) -> dict[int, int]:
-    """Driver-side forwarding map with path compression. The forwarding
-    tail holds one row per cluster MERGE since the last compaction —
-    bounded by compaction cadence, so the collect is bounded (and empty
-    right after a compaction)."""
-    dirs = _batch_dirs(forward_root, below)
+def _forward_map(spark: SparkSession, dirs: list[str]) -> dict[int, int]:
+    """Driver-side forwarding map with path compression over the given
+    forwarding batch dirs. The forwarding tail holds one row per cluster
+    MERGE since the last compaction — bounded by compaction cadence, so
+    the collect is bounded (and empty right after a compaction)."""
     if not dirs:
         return {}
     fwd = {
@@ -90,9 +77,9 @@ def _labels_for(
     chunked-In point lookup (_chunked_in_scan — row-group pruning on the
     vertex-sorted compacted prefix, and the filter also bounds the driver
     collect) over compacted prefix + delta tail, one collect job."""
-    comp, n = _compacted_dir(labels_root)
+    labels = BatchLog(spark, labels_root)
     scan = _chunked_in_scan(
-        spark, comp, _tail_dirs(labels_root, n, below), vertices, "vertex"
+        spark, labels.comp, labels.tail(below), vertices, "vertex"
     )
     if scan is None:
         return {}
@@ -116,14 +103,18 @@ def update_clusters(
     before this batch}, "new_root": {x: root after, for x in touched ∪
     old roots}}` — so downstream incremental consumers (the flagship
     rollup's retraction deltas, streaming.flagship) see exactly which
-    clusters this batch changed without re-deriving the union-find."""
+    clusters this batch changed without re-deriving the union-find.
+
+    `pairs` must be MATERIALIZED (process() passes the batch's written
+    pairs dir): the hot-batch guard below counts it and then collects
+    it, evaluating it twice."""
     from ..operators.chains import (
         _DEFAULT_DRIVER_EDGES,
         _DRIVER_EDGES_CONF,
+        MinLabelUnionFind,
         min_label_components,
     )
 
-    _SPARK_FOR_FS[0] = spark
     kdf = pairs.selectExpr(f"{key_expr_a} AS ka", f"{key_expr_b} AS kb")
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
@@ -133,19 +124,16 @@ def update_clusters(
     # would put the whole quadratic graph on the driver. Count first (the
     # batch pairs are an already-written parquet dir, so this is a cheap
     # metadata-ish scan); above the same crossover min_label_components
-    # uses, pre-collapse the batch graph DISTRIBUTIVELY and collect only a
-    # spanning edge per non-root vertex — O(batch vertices), connectivity-
-    # equivalent, so the union-find below (and every output: labels,
-    # forwarding, fold summary) is unchanged.
+    # uses, pre-collapse the batch graph DISTRIBUTIVELY and collect one
+    # (vertex, label) edge per vertex — O(batch vertices), connectivity-
+    # equivalent, and roots (vertex == label) stay in, so the touched set
+    # and every output (labels, forwarding, fold summary) is the same as
+    # the raw collect's.
     if kdf.count() <= max_edges:
         edges = [(int(r.ka), int(r.kb)) for r in kdf.collect()]
     else:
         lab = min_label_components(kdf, src="ka", dst="kb")
-        edges = [
-            (int(r.vertex), int(r.label))
-            for r in lab.collect()
-            if r.vertex != r.label
-        ]
+        edges = [(int(r.vertex), int(r.label)) for r in lab.collect()]
     labels_dir = _join(labels_root, "labels")
     forward_dir = _join(labels_root, "forward")
     if not edges:
@@ -159,7 +147,7 @@ def update_clusters(
         return {"touched": [], "old_root": {}, "new_root": {}}
     touched = sorted({v for e in edges for v in e})
     stored = _labels_for(spark, labels_dir, touched, below=batch_id)
-    fwd = _forward_map(spark, forward_dir, below=batch_id)
+    fwd = _forward_map(spark, BatchLog(spark, forward_dir).tail(batch_id))
 
     def current_root(v: int) -> int:
         l = stored.get(v, v)
@@ -171,30 +159,14 @@ def update_clusters(
 
     # driver union-find sized by the BATCH's pair graph: vertices are the
     # touched ids and their current roots
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # min-label rule keeps roots = component minima by induction
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
+    uf = MinLabelUnionFind()
     for v in touched:
-        union(v, current_root(v))
+        uf.union(v, old_root[v])
     for a, b in edges:
-        union(a, b)
+        uf.union(a, b)
 
     new_labels = [
-        (v, find(v)) for v in touched if v not in stored
+        (v, uf.find(v)) for v in touched if v not in stored
     ]
     # forwarding records merges of PRE-EXISTING roots only. A new vertex's
     # root is written directly into its labels row; and every pre-existing
@@ -205,8 +177,8 @@ def update_clusters(
     for v in touched:
         if v not in stored:
             continue
-        old = current_root(v)
-        new = find(old)
+        old = old_root[v]
+        new = uf.find(old)
         if new != old:
             merges.add((old, new))
     merges = sorted(merges)
@@ -224,22 +196,15 @@ def update_clusters(
         "touched": touched,
         "old_root": old_root,
         "new_root": {
-            x: find(x) for x in set(touched) | set(old_root.values())
+            x: uf.find(x) for x in set(touched) | set(old_root.values())
         },
     }
 
 
-def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
-    """Fully-resolved (vertex, label) over everything processed so far:
-    stored labels mapped through the (driver-bounded) forwarding map."""
-    _SPARK_FOR_FS[0] = spark
-    labels_dir = _join(labels_root, "labels")
-    comp, n = _compacted_dir(labels_dir)
-    dirs = ([comp] if comp else []) + _tail_dirs(labels_dir, n)
-    if not dirs:
-        return spark.createDataFrame([], LABELS_SCHEMA)
-    lab = spark.read.parquet(*dirs)
-    fwd = _forward_map(spark, _join(labels_root, "forward"))
+def _resolve(spark: SparkSession, lab: DataFrame,
+             forward_dirs: list[str]) -> DataFrame:
+    """Stored (vertex, label) rows mapped through the forwarding map."""
+    fwd = _forward_map(spark, forward_dirs)
     if not fwd:
         return lab.select("vertex", "label")
     mapping = spark.createDataFrame(
@@ -249,6 +214,18 @@ def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
         lab.join(F.broadcast(mapping),
                  lab.label == mapping.from_label, "left")
         .select("vertex", F.coalesce("to_label", "label").alias("label"))
+    )
+
+
+def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
+    """Fully-resolved (vertex, label) over everything processed so far:
+    stored labels mapped through the (driver-bounded) forwarding map."""
+    dirs = BatchLog(spark, _join(labels_root, "labels")).live()
+    if not dirs:
+        return spark.createDataFrame([], LABELS_SCHEMA)
+    return _resolve(
+        spark, spark.read.parquet(*dirs),
+        BatchLog(spark, _join(labels_root, "forward")).tail(),
     )
 
 
@@ -264,68 +241,31 @@ def compact_labels(
     layout pruned per-batch reads need), dropping the merged label deltas
     and the forwarding rows they absorbed. Only batches certified by the
     dedup metrics ledger merge (crash-window replay safety, as in
-    compact_store)."""
-    _SPARK_FOR_FS[0] = spark
-    labels_dir = _join(labels_root, "labels")
-    forward_dir = _join(labels_root, "forward")
-    comp, comp_n = _compacted_dir(labels_dir)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-
-    def ok(d: str) -> bool:
-        i = int(re.search(r"batch=(\d+)$", d).group(1))
-        return i in certified or i < mcomp_n
-
-    lab_batches = [d for d in _batch_dirs(labels_dir) if ok(d)]
-    fwd_batches = [d for d in _batch_dirs(forward_dir) if ok(d)]
-    if not lab_batches and not fwd_batches:
-        return comp_n
-    ids = [
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in lab_batches + fwd_batches
-    ]
-    horizon = max(ids) + 1
-    if horizon <= comp_n:
-        # every input is a sub-horizon crash-window replay dir — degenerate
-        # (empty) by construction, since a replay of a batch the compacted
-        # labels already resolve folds to a no-op. Dropping them is the
-        # whole job; recommitting at the unchanged horizon would only open
-        # a crash window where the store's one compacted copy is mid-swap.
-        for d in lab_batches + fwd_batches:
-            _rmtree(d)
-        return comp_n
-    lab_tail = [
-        d for d in lab_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= comp_n
-    ]
-    srcs = ([comp] if comp else []) + lab_tail
-    lab = spark.read.parquet(*srcs)
-    fwd = _forward_map(spark, forward_dir)
-    if fwd:
-        mapping = spark.createDataFrame(
-            [(k, v) for k, v in fwd.items()], FORWARD_SCHEMA
-        )
-        lab = (
-            lab.join(F.broadcast(mapping),
-                     lab.label == mapping.from_label, "left")
-            .select("vertex", F.coalesce("to_label", "label").alias("label"))
-        )
+    compact_store). The forwarding rows of certified batches below the
+    committed horizon are resolved into the new prefix, so they are
+    dropped after it commits."""
+    labels = BatchLog(spark, _join(labels_root, "labels"))
+    forward = BatchLog(spark, _join(labels_root, "forward"))
+    certified = _metrics_log(spark, store_path).covers
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        labels_dir, horizon,
-        lambda tmp: (
+
+    def write(tmp: str, tail: list[str]) -> None:
+        prefix = [labels.comp] if labels.comp else []
+        lab = _resolve(
+            spark, spark.read.parquet(*prefix, *tail), forward.tail()
+        )
+        (
             lab.repartitionByRange(n_parts, "vertex")
             .sortWithinPartitions("vertex")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=lab_batches + fwd_batches,
-        old_comp=comp,
-    )
+        )
+
+    horizon = labels.compact(certified, write)
+    for i, d in forward.batches.items():
+        if i < horizon and certified(i):
+            _rmtree(d, spark)
     return horizon
 
 

@@ -39,47 +39,46 @@ from ..operators.images import (
 # --- filesystem access: plain os for local paths, Hadoop FS for URI paths
 # (hdfs://, s3a://, file://, ...) so the store works on cluster storage.
 # Spark's own reads/writes are scheme-transparent already; only the
-# listing / delete / rename below are os-level.
-
-_SPARK_FOR_FS: list[SparkSession | None] = [None]
+# listing / delete / rename below are os-level. URI paths go through the
+# given session's Hadoop configuration, else the active session's.
 
 
 def _is_uri(p: str) -> bool:
     return "://" in p
 
 
-def _hadoop_fs(p: str):
-    spark = _SPARK_FOR_FS[0] or SparkSession.getActiveSession()
+def _hadoop_fs(p: str, spark: SparkSession | None):
+    spark = spark or SparkSession.getActiveSession()
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(p)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def _listdir(root: str) -> list[str]:
+def _listdir(root: str, spark: SparkSession | None = None) -> list[str]:
     if not _is_uri(root):
         return sorted(os.listdir(root)) if os.path.isdir(root) else []
-    fs, jvm = _hadoop_fs(root)
+    fs, jvm = _hadoop_fs(root, spark)
     jpath = jvm.org.apache.hadoop.fs.Path(root)
     if not fs.exists(jpath):
         return []
     return sorted(st.getPath().getName() for st in fs.listStatus(jpath))
 
 
-def _rmtree(p: str) -> None:
+def _rmtree(p: str, spark: SparkSession | None = None) -> None:
     if not _is_uri(p):
         import shutil
 
         shutil.rmtree(p, ignore_errors=True)
         return
-    fs, jvm = _hadoop_fs(p)
+    fs, jvm = _hadoop_fs(p, spark)
     fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
 
 
-def _rename(src: str, dst: str) -> None:
+def _rename(src: str, dst: str, spark: SparkSession | None = None) -> None:
     if not _is_uri(src):
         os.rename(src, dst)
         return
-    fs, jvm = _hadoop_fs(src)
+    fs, jvm = _hadoop_fs(src, spark)
     P = jvm.org.apache.hadoop.fs.Path
     # Hadoop FileSystem.rename reports failure by RETURNING False (it only
     # throws for some error classes); on object stores the "rename" may
@@ -89,10 +88,10 @@ def _rename(src: str, dst: str) -> None:
         raise IOError(f"Hadoop FS rename failed: {src} -> {dst}")
 
 
-def _exists(p: str) -> bool:
+def _exists(p: str, spark: SparkSession | None = None) -> bool:
     if not _is_uri(p):
         return os.path.exists(p)
-    fs, jvm = _hadoop_fs(p)
+    fs, jvm = _hadoop_fs(p, spark)
     return fs.exists(jvm.org.apache.hadoop.fs.Path(p))
 
 
@@ -100,78 +99,128 @@ def _join(root: str, name: str) -> str:
     return root.rstrip("/") + "/" + name
 
 
-def _batch_dirs(root: str, below: int | None = None) -> list[str]:
-    out = []
-    for d in _listdir(root):
-        m = re.fullmatch(r"batch=(\d+)", d)
-        if m and (below is None or int(m.group(1)) < below):
-            out.append(_join(root, d))
-    return out
+class BatchLog:
+    """One store subtree of the incremental family (signatures, pairs,
+    metrics, ANN state, cluster labels and forwarding, rollup deltas and
+    sizes): its per-micro-batch `batch=<id>` dirs, each an idempotent
+    overwrite, plus the newest `compacted=<N>` prefix holding every batch
+    id < N merged. A snapshot of ONE listing — construct a new log to see
+    later changes. `spark` (None = the active session) resolves URI paths.
 
+    Batch dirs below N only exist as crash-window replays whose
+    byte-identical content the prefix already holds: every view skips
+    them, and compaction drops them."""
 
-def _compacted_dir(root: str) -> tuple[str | None, int]:
-    """Newest `compacted=<N>` dir (signatures of every batch id < N merged
-    into one directory) and its N; (None, 0) when the store has never been
-    compacted."""
-    best, best_n = None, 0
-    for d in _listdir(root):
-        m = re.fullmatch(r"compacted=(\d+)", d)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = _join(root, d), int(m.group(1))
-    return best, best_n
+    def __init__(self, spark: SparkSession | None, root: str):
+        self.spark, self.root = spark, root
+        self.comp: str | None = None  # newest compacted=<N> dir
+        self.n = 0  # its horizon N; 0 = never compacted
+        self.batches: dict[int, str] = {}  # batch id → dir, in id order
+        for name in _listdir(root, spark):
+            m = re.fullmatch(r"(batch|compacted)=(\d+)", name)
+            if m is None:
+                continue
+            i = int(m.group(2))
+            if m.group(1) == "batch":
+                self.batches[i] = _join(root, name)
+            elif i > self.n:
+                self.comp, self.n = _join(root, name), i
 
+    def covers(self, b: int) -> bool:
+        """Batch b's content is in this log (prefix or batch dir)."""
+        return b < self.n or b in self.batches
 
-def _tail_dirs(root: str, n: int, below: int | None = None) -> list[str]:
-    """batch=<id> dirs with n <= id (< below) — the uncompacted tail."""
-    return [
-        d for d in _batch_dirs(root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
+    def tail(self, below: int | None = None) -> list[str]:
+        """The uncompacted tail: batch dirs with N <= id (< below).
 
-
-def _commit_compacted(
-    root: str, horizon: int, write, sources: list[str],
-    old_comp: str | None = None, strict: bool = True,
-) -> bool:
-    """The shared atomic-replace protocol every store compaction commits
-    through: write the merged content to `compacted=<horizon>.tmp` via
-    `write(tmp_path)`, rename into place, and VERIFY the final dir exists
-    before any destructive step — Hadoop FS rename reports failure by
-    returning False (_rename raises on it) but object stores can also lie,
-    so existence is checked explicitly. Only then are the merged `sources`
-    and the previous compacted dir deleted. strict=False returns False
-    instead of raising when the committed dir never materialized (callers
-    whose sources are safe to leave behind)."""
-    tmp = _join(root, f"compacted={horizon}.tmp")
-    final = _join(root, f"compacted={horizon}")
-    _rmtree(tmp)
-    write(tmp)
-    _rmtree(final)
-    try:
-        _rename(tmp, final)
-    except IOError:
-        # strict=False callers (the lenient metrics rollup) treat a failed
-        # commit as deferred listing-growth debt — the rename raising here
-        # must not abort them any more than the existence check below would
-        if strict:
-            raise
-        return False
-    if not _exists(final):
-        if strict:
-            raise IOError(
-                f"compacted {final} missing after rename — refusing to "
-                f"delete merged sources"
+        Horizon guard: a (re)processed batch reads with `below=<its id>`.
+        The streaming checkpoint only ever replays the single in-flight
+        batch, and compaction only merges certified batches, so that id
+        can sit AT the horizon (N == below + 1: the certified-but-
+        uncommitted crash window — safe, the replay recomputes the same
+        idempotent outputs) but never further behind; N > below + 1 means
+        the store was compacted while the stream ran, which WOULD silently
+        change the batch's inputs — refuse."""
+        if below is not None and self.n > below + 1:
+            raise RuntimeError(
+                f"{self.root} compacted through batch {self.n} but batch "
+                f"{below} is being (re)processed — a replay can sit at most "
+                f"ONE batch behind the horizon; compact between stream runs"
             )
-        return False
-    for d in sources:
-        _rmtree(d)
-    # a rerun at an UNCHANGED horizon re-commits to the same path the old
-    # compacted dir occupied (reachable for labels/rollup, whose callers
-    # have no empty-tail early return): the rename already replaced it, so
-    # deleting old_comp here would delete the store's only compacted state
-    if old_comp and old_comp != final:
-        _rmtree(old_comp)
-    return True
+        return [
+            d for i, d in self.batches.items()
+            if i >= self.n and (below is None or i < below)
+        ]
+
+    def live(self, below: int | None = None) -> list[str]:
+        """Directories whose union is the content of every batch (< below):
+        the prefix plus the tail."""
+        return ([self.comp] if self.comp else []) + self.tail(below)
+
+    def compact(self, certified, write) -> int:
+        """Merge the batches `certified(id)` admits into
+        `compacted=<max id + 1>`: `write(tmp, tail)` writes the prefix
+        (`self.comp`) merged with the certified `tail` dirs to `tmp`, and
+        commit() swaps it in. Certified dirs below N are sub-horizon
+        replays: with no tail to merge they are dropped, never recommitted
+        at the unchanged horizon. Returns the new horizon, or N when
+        nothing was committed."""
+        sel = {i: d for i, d in self.batches.items() if certified(i)}
+        tail = [d for i, d in sel.items() if i >= self.n]
+        if not tail:
+            for d in sel.values():
+                _rmtree(d, self.spark)
+            return self.n
+        horizon = max(sel) + 1
+        self.commit(horizon, lambda tmp: write(tmp, tail), list(sel.values()))
+        return horizon
+
+    def commit(self, horizon: int, write, sources: list[str],
+               strict: bool = True) -> bool:
+        """The atomic-replace protocol every compaction commits through:
+        `write(tmp)` fills `compacted=<horizon>.tmp`, a rename moves it into
+        place, and the final dir is VERIFIED before anything is deleted —
+        Hadoop FS rename reports failure by returning False (_rename raises
+        on it) but object stores can also lie, so existence is checked
+        explicitly. Only then are the merged `sources` and the old prefix
+        deleted, so a failed commit loses nothing. A horizon <= N is
+        refused before anything is touched: it would have to replace the
+        store's only prefix in place. strict=False returns False instead of
+        raising when the rename fails (callers whose sources are safe to
+        leave for the next compaction)."""
+        if horizon <= self.n:
+            raise ValueError(
+                f"refusing to commit {self.root} at horizon {horizon}: its "
+                f"prefix is already at {self.n}"
+            )
+        tmp = _join(self.root, f"compacted={horizon}.tmp")
+        final = _join(self.root, f"compacted={horizon}")
+        _rmtree(tmp, self.spark)
+        write(tmp)
+        try:
+            _rename(tmp, final, self.spark)
+            if not _exists(final, self.spark):
+                raise IOError(
+                    f"compacted {final} missing after rename — refusing to "
+                    f"delete merged sources"
+                )
+        except IOError:
+            if strict:
+                raise
+            return False
+        for d in [*sources, *([self.comp] if self.comp else [])]:
+            _rmtree(d, self.spark)
+        return True
+
+
+def _metrics_log(spark: SparkSession, store_path: str) -> BatchLog:
+    """The dedup store's per-batch metrics ledger. Its `covers(b)` is THE
+    certification rule of every incremental store: process() writes batch
+    b's metrics row LAST, so a row — as `metrics/batch=b`, or rolled into
+    the metrics prefix (b < its horizon) — proves all of b's outputs are
+    complete. Only certified batches may be compacted: an uncertified one
+    may still be replayed and must find the stores as its first run did."""
+    return BatchLog(spark, _join(store_path, "metrics"))
 
 
 def _chunked_in_scan(
@@ -206,35 +255,12 @@ def _chunked_in_scan(
 
 
 def _store_dirs(root: str, below: int | None = None) -> list[str]:
-    """Directories whose union is the signatures of all batches < `below`:
-    the newest compacted prefix plus the uncompacted batch tail. NOTE the
-    two layouts differ: `batch=<id>` dirs hold signature rows, the
-    `compacted=<N>` dir holds BANDED rows (8 per signature, sorted by
-    bandkey — see compact_store); use read_store_signatures for a uniform
-    one-row-per-signature view.
-
-    Horizon check: the streaming checkpoint only ever replays the single
-    in-flight batch, and compact_store only covers metrics-certified
-    batches, so a (re)processed batch id can sit AT the horizon (n ==
-    below + 1: certified-but-uncommitted crash window — safe, because the
-    replayed batch's signatures appearing both fresh and inside the
-    compacted dir collapse in pairs_touching's canonical distinct) but
-    never BELOW it; n > below + 1 means the store was compacted while the
-    stream ran, which WOULD silently change join inputs — refuse."""
-    comp, n = _compacted_dir(root)
-    if comp is None:
-        return _batch_dirs(root, below)
-    if below is not None and n > below + 1:
-        raise RuntimeError(
-            f"store compacted through batch {n} but batch {below} is being "
-            f"(re)processed — compact_store must only run between stream "
-            f"runs"
-        )
-    tail = [
-        d for d in _batch_dirs(root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
-    return [comp, *tail]
+    """Directories whose union is the signatures of all batches < `below`
+    (BatchLog.live, horizon guard included). NOTE the two layouts differ:
+    `batch=<id>` dirs hold signature rows, the `compacted=<N>` dir holds
+    BANDED rows (8 per signature, sorted by bandkey — see compact_store);
+    use read_store_signatures for a uniform one-row-per-signature view."""
+    return BatchLog(None, root).live(below)
 
 
 def banded_signatures(sigs: DataFrame) -> DataFrame:
@@ -254,20 +280,16 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
     """Uniform one-row-per-signature view of the store regardless of
     layout: band-0 rows of the compacted dir (exactly one per signature)
     plus the raw signature rows of the uncompacted batch tail."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(root)
+    store = BatchLog(spark, root)
     cols = ["image_id", *WIDE_WORDS]
     parts = []
-    if comp is not None:
+    if store.comp is not None:
         parts.append(
-            spark.read.parquet(comp)
+            spark.read.parquet(store.comp)
             .filter(F.col("bandkey") < F.lit(1 << 32))
             .select(*cols)
         )
-    tail = [
-        d for d in _batch_dirs(root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
+    tail = store.tail()
     if tail:
         parts.append(spark.read.parquet(*tail).select(*cols))
     if not parts:
@@ -385,39 +407,17 @@ def compact_pairs(
     crash-window batch's pairs dir out of the merge so its replay stays
     idempotent. read_pairs unions the compacted prefix with the batch
     tail."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(pairs_path)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-    batches = [
-        d for d in _batch_dirs(pairs_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp_n
-    ]
-    if not batches:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in batches]
-    horizon = max(ids) + 1
-    tail = [d for d, i in zip(batches, ids) if i >= comp_n]
-    if not tail:
-        for d in batches:
-            _rmtree(d)
-        return comp_n
-    merged = spark.read.parquet(*tail).select("id_a", "id_b", "hamming")
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
-    _commit_compacted(
-        pairs_path, horizon,
-        lambda tmp: merged.coalesce(
+    pairs = BatchLog(spark, pairs_path)
+
+    def write(tmp: str, tail: list[str]) -> None:
+        merged = spark.read.parquet(*tail).select("id_a", "id_b", "hamming")
+        if pairs.comp:
+            merged = spark.read.parquet(pairs.comp).unionByName(merged)
+        merged.coalesce(
             num_files or spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(tmp),
-        sources=[d for d, i in zip(batches, ids) if i < horizon],
-        old_comp=comp,
-    )
-    return horizon
+        ).write.mode("overwrite").parquet(tmp)
+
+    return pairs.compact(_metrics_log(spark, store_path).covers, write)
 
 
 def compact_store(
@@ -432,7 +432,8 @@ def compact_store(
     query is active): at one dir per micro-batch a long-lived ingest
     accumulates unbounded directory listings; compaction bounds store reads
     to one merged dir + the tail since the last compaction. Atomic via
-    write-to-tmp + rename; returns the new horizon N (0 = nothing to do).
+    write-to-tmp + rename (BatchLog.commit); returns the new horizon N
+    (0 = nothing to do).
 
     The compacted dir is written in the BANDED layout, range-sorted by
     bandkey with `parquet.block.size = block_bytes` row groups, so that
@@ -441,85 +442,46 @@ def compact_store(
     to O(batch) instead of O(store). Smaller block_bytes = finer pruning
     granularity at the cost of more footer metadata.
 
-    Only batches CERTIFIED by a metrics row are eligible: a crash can leave
-    store/batch=b written but the streaming checkpoint uncommitted, and the
-    restarted stream will REPLAY batch b — if compaction had swallowed it,
-    _store_dirs' horizon guard would refuse the replay forever. The metrics
-    row is written last in process(), so its presence proves the batch's
-    store+pairs output is complete (the checkpoint commit may still be
-    missing, but a replay over a compacted horizon N == b is then
-    indistinguishable from the committed run: same store prefix, same
-    idempotent overwrite outputs). Certified per-batch metrics rows below
-    the horizon are themselves rolled into `metrics/compacted=<N>` so the
-    one-dir-per-batch listing growth is bounded in the metrics subtree too.
-
-    Every destructive step is ordered AFTER the committed dir is verified
-    to exist (Hadoop FS rename reports failure by returning False — _rename
-    raises on it — but object stores can also lie, so existence is checked
-    explicitly before any source is deleted)."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(store_path)
-    metrics_root = _join(store_path, "metrics")
-    metric_dirs = _batch_dirs(metrics_root)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1)) for d in metric_dirs
-    }
-    mcomp0, mcomp0_n = _compacted_dir(metrics_root)
-    batches = [
-        d for d in _batch_dirs(store_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        # below the metrics horizon = certified before that compaction
-        # (its per-batch metrics dir was rolled up); treat replayed store
-        # dirs there as certified so they get cleaned up
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp0_n
-    ]
-    if not batches:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in batches]
-    horizon = max(ids) + 1
-    tail_sigs = [d for d, i in zip(batches, ids) if i >= comp_n]
-    if not tail_sigs:
-        # only sub-horizon replays (their content is already in the
-        # compacted dir — deterministic recompute) — just drop them
-        for d in batches:
-            _rmtree(d)
-        return comp_n
-    merged = banded_signatures(spark.read.parquet(*tail_sigs))
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
+    Only batches CERTIFIED by a metrics row are eligible (_metrics_log): a
+    crash can leave store/batch=b written but the streaming checkpoint
+    uncommitted, and the restarted stream will REPLAY batch b — if
+    compaction had swallowed it, the horizon guard would refuse the replay
+    forever. A replay of a certified batch over a compacted horizon
+    N == b + 1 is indistinguishable from the committed run: same store
+    prefix, same idempotent overwrite outputs. Certified per-batch metrics
+    rows are themselves rolled into `metrics/compacted=<N>` so the
+    one-dir-per-batch listing growth is bounded in the metrics subtree
+    too."""
+    store = BatchLog(spark, store_path)
+    metrics = _metrics_log(spark, store_path)
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        store_path, horizon,
-        lambda tmp: (
+
+    def write(tmp: str, tail: list[str]) -> None:
+        merged = banded_signatures(spark.read.parquet(*tail))
+        if store.comp:
+            merged = spark.read.parquet(store.comp).unionByName(merged)
+        (
             merged.repartitionByRange(n_parts, "bandkey")
             .sortWithinPartitions("bandkey")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=[d for d, i in zip(batches, ids) if i < horizon],
-        old_comp=comp,
-    )
-    # ---- roll certified metrics rows below the horizon into one file too.
-    # Metric batch dirs BELOW the previous metrics horizon are crash-window
-    # replays whose rows the previous compacted file already holds —
-    # including them would bake a duplicate row in permanently. Lenient
-    # commit (strict=False): the store commit above already succeeded, and
-    # uncompacted metric dirs are merely a listing-growth debt, safe to
-    # leave for the next compaction.
-    mcomp, mcomp_n = _compacted_dir(metrics_root)
-    msrcs = ([mcomp] if mcomp else []) + [
-        d for d in metric_dirs
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= mcomp_n
-    ]
-    _commit_compacted(
-        metrics_root, horizon,
-        lambda tmp: spark.read.parquet(*msrcs).coalesce(1)
-        .write.mode("overwrite").parquet(tmp),
-        sources=metric_dirs,
-        old_comp=mcomp,
-        strict=False,
-    )
+        )
+
+    horizon = store.compact(metrics.covers, write)
+    if horizon > store.n:
+        # ---- roll the certified metrics rows into one file too: the live
+        # metrics view (prefix + tail; sub-horizon replay dirs would bake a
+        # duplicate row in permanently). Lenient commit: the store commit
+        # above already succeeded, and uncompacted metric dirs are merely a
+        # listing-growth debt, safe to leave for the next compaction.
+        metrics.commit(
+            horizon,
+            lambda tmp: spark.read.parquet(*metrics.live()).coalesce(1)
+            .write.mode("overwrite").parquet(tmp),
+            sources=list(metrics.batches.values()),
+            strict=False,
+        )
     return horizon
 
 
@@ -683,8 +645,6 @@ def start_incremental_dedup(
     `on_batch_complete(batch_id)` (test hook) runs after each batch's
     metrics row lands — e.g. to trigger a mid-stream compaction."""
 
-    _SPARK_FOR_FS[0] = spark
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         import time
 
@@ -706,26 +666,16 @@ def start_incremental_dedup(
             rows + the uncompacted tail + the pruned compacted prefix —
             RE-LISTED on each call so a retry after a mid-stream compaction
             picks up the new layout."""
-            comp, n = _compacted_dir(store_path)
-            if comp is not None and n > batch_id + 1:
-                raise RuntimeError(
-                    f"store compacted through batch {n} but batch "
-                    f"{batch_id} is being (re)processed — a replay can "
-                    f"sit at most ONE batch behind the horizon"
-                )
-            tail = [
-                d for d in _batch_dirs(store_path, below=batch_id)
-                if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-                and d != sig_dir
-            ]
+            store = BatchLog(spark, store_path)
+            tail = store.tail(below=batch_id)
             allb = newb
             if tail:
                 allb = allb.unionByName(
                     banded_signatures(spark.read.parquet(*tail))
                 )
-            if comp is not None:
+            if store.comp is not None:
                 allb = allb.unionByName(
-                    pruned_store_scan(spark, comp, keys)
+                    pruned_store_scan(spark, store.comp, keys)
                 )
             return allb
 
@@ -773,12 +723,7 @@ def start_incremental_dedup(
                 # deltas/batch dir. Certification is written AFTER the
                 # rollup, so it proves those outputs exist and are correct
                 # — keep them and skip the recompute.
-                mroot = _join(store_path, "metrics")
-                certified = (
-                    _compacted_dir(mroot)[1] > int(batch_id)
-                    or _exists(_join(mroot, f"batch={batch_id:09d}"))
-                )
-                if not certified:
+                if not _metrics_log(spark, store_path).covers(int(batch_id)):
                     update_rollup(
                         spark, rollup_root, int(batch_id), new,
                         rollup_key_expr, fold, rollup_assign,
@@ -820,16 +765,8 @@ def start_incremental_dedup(
 
 def read_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
     """Accumulated pair set across every processed micro-batch: the
-    compacted prefix (compact_pairs) plus batch dirs at or above its
-    horizon. Sub-horizon batch dirs are skipped — they only exist as
-    crash-window replays whose (byte-identical) content the compacted dir
-    already holds, so including them would duplicate rows."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(pairs_path)
-    dirs = ([comp] if comp else []) + [
-        d for d in _batch_dirs(pairs_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
+    compacted prefix (compact_pairs) plus the batch tail (BatchLog.live)."""
+    dirs = BatchLog(spark, pairs_path).live()
     if not dirs:
         return spark.createDataFrame(
             [], "id_a string, id_b string, hamming int"
@@ -842,15 +779,7 @@ def read_batch_metrics(spark: SparkSession, store_path: str) -> DataFrame:
     secs, images_per_sec) — the mid-run resume ledger: a batch with a
     metrics row is complete; absent rows re-run from the streaming
     checkpoint."""
-    _SPARK_FOR_FS[0] = spark
-    metrics_root = _join(store_path, "metrics")
-    mcomp, n = _compacted_dir(metrics_root)
-    # skip sub-horizon batch dirs: they only exist as crash-window replays
-    # whose (byte-identical) rows the compacted file already holds
-    dirs = ([mcomp] if mcomp else []) + [
-        d for d in _batch_dirs(metrics_root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
+    dirs = _metrics_log(spark, store_path).live()
     if not dirs:
         return spark.createDataFrame([], BATCH_METRICS_SCHEMA)
     return spark.read.parquet(*dirs)

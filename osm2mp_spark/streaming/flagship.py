@@ -52,20 +52,9 @@ update_rollup when the batch's metrics row exists, keeping the original
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
-    _batch_dirs,
-    _chunked_in_scan,
-    _commit_compacted,
-    _compacted_dir,
-    _join,
-    _rmtree,
-    _tail_dirs,
-)
+from .dedup import BatchLog, _chunked_in_scan, _join, _metrics_log
 
 DELTAS_SCHEMA = "city_id string, tile_id int, dk long, di long"
 SIZES_SCHEMA = "root long, size long, b long"
@@ -84,9 +73,9 @@ def _sizes_for(
     batches only), and a replay of a CERTIFIED batch never reaches this
     lookup (the process() certification guard skips update_rollup), so
     every read here sees state strictly below the batch being folded."""
-    comp, n = _compacted_dir(sizes_root)
+    sizes = BatchLog(spark, sizes_root)
     scan = _chunked_in_scan(
-        spark, comp, _tail_dirs(sizes_root, n, below), roots, "root"
+        spark, sizes.comp, sizes.tail(below), roots, "root"
     )
     best: dict[int, tuple[int, int]] = {}
     if scan is not None:
@@ -113,7 +102,6 @@ def update_rollup(
     DataFrame to (point_id, city_id, tile_id) — the pure spatial kernel
     (positions derive from the key, so a cluster's row placement follows
     its root). Idempotent overwrite per batch."""
-    _SPARK_FOR_FS[0] = spark
     sizes_root = _join(rollup_root, "sizes")
     deltas_dir = _join(rollup_root, f"deltas/batch={batch_id:09d}")
 
@@ -199,10 +187,7 @@ def read_rollup(spark: SparkSession, rollup_root: str) -> DataFrame:
     replays whose contribution the compacted file already holds). Rows
     whose net keeper count is zero are clusters fully retracted from that
     cell — absent from the batch rollup, so dropped here."""
-    _SPARK_FOR_FS[0] = spark
-    deltas_root = _join(rollup_root, "deltas")
-    comp, n = _compacted_dir(deltas_root)
-    dirs = ([comp] if comp else []) + _tail_dirs(deltas_root, n)
+    dirs = BatchLog(spark, _join(rollup_root, "deltas")).live()
     log = (
         spark.read.parquet(*dirs) if dirs
         else spark.createDataFrame([], DELTAS_SCHEMA)
@@ -222,89 +207,42 @@ def compact_rollup(
     (zero-net cells dropped) and the sizes store into a root-sorted
     `sizes/compacted=<N>` holding only the latest row per root — bounding
     both the listing growth and the point-lookup read paths, same
-    crash-window certification rules as compact_store."""
-    _SPARK_FOR_FS[0] = spark
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    _, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
+    crash-window certification rules as compact_store. Each subtree
+    commits at its own certified horizon; returns the larger."""
+    deltas = BatchLog(spark, _join(rollup_root, "deltas"))
+    sizes = BatchLog(spark, _join(rollup_root, "sizes"))
+    certified = _metrics_log(spark, store_path).covers
+    n_parts = num_files or spark.sparkContext.defaultParallelism
 
-    def ok(d: str) -> bool:
-        i = int(re.search(r"batch=(\d+)$", d).group(1))
-        return i in certified or i < mcomp_n
-
-    deltas_root = _join(rollup_root, "deltas")
-    sizes_root = _join(rollup_root, "sizes")
-    d_batches = [d for d in _batch_dirs(deltas_root) if ok(d)]
-    s_batches = [d for d in _batch_dirs(sizes_root) if ok(d)]
-    if not d_batches and not s_batches:
-        return _compacted_dir(deltas_root)[1]
-    ids = [
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in d_batches + s_batches
-    ]
-    horizon = max(ids) + 1
-
-    # ---- deltas: net per cell
-    comp, comp_n = _compacted_dir(deltas_root)
-    tail = [
-        d for d in d_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= comp_n
-    ]
-    if not tail:
-        # only sub-horizon replay dirs (already represented in the
-        # compacted net, or never written thanks to the certification
-        # guard) — drop them, never recommit at an unchanged horizon
-        for d in d_batches:
-            _rmtree(d)
-    else:
-        srcs = ([comp] if comp else []) + tail
-        net = (
-            spark.read.parquet(*srcs)
+    def write_net(tmp: str, tail: list[str]) -> None:
+        prefix = [deltas.comp] if deltas.comp else []
+        (
+            spark.read.parquet(*prefix, *tail)
             .groupBy("city_id", "tile_id")
             .agg(F.sum("dk").alias("dk"), F.sum("di").alias("di"))
             .filter("dk != 0 OR di != 0")
-        )
-        _commit_compacted(
-            deltas_root, horizon,
-            lambda tmp: net.coalesce(
-                num_files or spark.sparkContext.defaultParallelism
-            ).write.mode("overwrite").parquet(tmp),
-            sources=d_batches,
-            old_comp=comp,
+            .coalesce(n_parts)
+            .write.mode("overwrite").parquet(tmp)
         )
 
-    # ---- sizes: latest row per root, root-sorted for the pruned lookups
-    scomp, scomp_n = _compacted_dir(sizes_root)
-    stail = [
-        d for d in s_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= scomp_n
-    ]
-    if not stail:
-        for d in s_batches:
-            _rmtree(d)
-    else:
-        ssrcs = ([scomp] if scomp else []) + stail
-        latest = (
-            spark.read.parquet(*ssrcs)
+    def write_latest(tmp: str, tail: list[str]) -> None:
+        # latest row per root, root-sorted for the pruned lookups
+        prefix = [sizes.comp] if sizes.comp else []
+        (
+            spark.read.parquet(*prefix, *tail)
             .groupBy("root")
             .agg(F.max(F.struct("b", "size")).alias("m"))
             .select("root", F.col("m.size").alias("size"),
                     F.col("m.b").alias("b"))
+            .repartitionByRange(n_parts, "root")
+            .sortWithinPartitions("root")
+            .write.mode("overwrite").parquet(tmp)
         )
-        n_parts = num_files or spark.sparkContext.defaultParallelism
-        _commit_compacted(
-            sizes_root, horizon,
-            lambda tmp: (
-                latest.repartitionByRange(n_parts, "root")
-                .sortWithinPartitions("root")
-                .write.mode("overwrite").parquet(tmp)
-            ),
-            sources=s_batches,
-            old_comp=scomp,
-        )
-    return horizon
+
+    return max(
+        deltas.compact(certified, write_net),
+        sizes.compact(certified, write_latest),
+    )
 
 
 __all__ = [
